@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..bounds import bounded_collect
+
 
 def _norm_text(col="text"):
     """Canonical text form: lowercase, collapse whitespace."""
@@ -1126,6 +1128,13 @@ def substring_dedup_chunks(
     )
 
 
+#: most eval documents :func:`exact_lcs_contamination` collects to the
+#: driver. Every task builds its own automaton over them, which measured
+#: about 24 KB per document of 66 tokens (the sf1 fixture's 944 eval docs:
+#: 23 MB), so the bound keeps one task's automaton near 250 MB.
+MAX_EVAL_DOCS = 10_000
+
+
 def _build_token_sam(seqs: "list[list[int]]"):
     """Generalized suffix automaton over token-id sequences (Blumer et al.
     1985 construction, the standard online form with clones; generalized to
@@ -1243,9 +1252,11 @@ def exact_lcs_contamination(
     corpus), so the eval token lists are a driver-built broadcast — the
     guide §3.2 manual-broadcast pattern, same data volume the previous
     form shipped as its broadcast eval-gram side; the automaton is linear
-    in eval tokens and is built once per task (guide §4.5). The training
-    side — the 100 TB side — is never shuffled at all (the previous form
-    shuffled per-doc probe state every refinement round).
+    in eval tokens and is built once per task (guide §4.5). An eval side
+    of more than ``MAX_EVAL_DOCS`` documents raises
+    :class:`~emdatapipelines_spark.bounds.DriverCollectBoundError`. The
+    training side — the 100 TB side — is never shuffled at all (the
+    previous form shuffled per-doc probe state every refinement round).
 
     ``fanout`` is retired (the automaton needs no search grid); accepted
     for call compatibility.
@@ -1268,7 +1279,11 @@ def exact_lcs_contamination(
     # automaton without ever being collected or shuffled.
     ev_tokens = [
         list(r["tk"])
-        for r in ev.select(toks.alias("tk")).collect()
+        for r in bounded_collect(
+            ev.select(toks.alias("tk")),
+            MAX_EVAL_DOCS,
+            "exact_lcs_contamination eval corpus (llmdata.dedup.MAX_EVAL_DOCS)",
+        )
         if r["tk"]
     ]
     vocab: dict[str, int] = {}

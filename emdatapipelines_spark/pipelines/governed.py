@@ -13,6 +13,13 @@ governance surfaces the reference wires around its dbt DAG all enabled:
 - SCD2:      timestamp-strategy snapshot of declaration state with hard
   deletes (≈ `snapshots/disaster_declarations_snapshot.sql`)
 
+The model DAG is built concurrently (`plans/registry.py`). The report's
+actions — the quality-gate collect, the retention and SCD2 counts and the
+``REPORT_TABLES`` counts — are independent reads of frames that are already
+built, so they are submitted together to the same kind of driver pool. Each
+lands under its own report key, so the report does not depend on which
+action finishes first.
+
 `run_governed_pipeline` returns a JSON-able run report;
 `scripts/run_governed_pipeline.py` executes it at sf1 and commits the
 report (GOVERNED_RUN.json), and `tests/test_governed_run.py` pins the
@@ -24,6 +31,7 @@ from __future__ import annotations
 import time
 from datetime import datetime
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession, functions as F
 
 from ..audit import retention_filter
@@ -31,7 +39,7 @@ from ..clock import DEFAULT_CLOCK
 from ..lineage import GovernanceLog
 from ..operators.scd2 import scd2_init, scd2_merge
 from ..plans.graph_marts import register_graph_marts
-from ..plans.registry import ModelRegistry
+from ..plans.registry import ModelRegistry, driver_pool
 from ..plans.text_marts import register_text_marts
 from ..quality.dbt_tests import (
     TestCase,
@@ -77,11 +85,11 @@ def run_governed_pipeline(
     wall0 = time.perf_counter()
     reg.build(spark, now=now)
 
-    # quality gates on the staging layer (dbt test analog) — evaluated
-    # BEFORE the serving tables are declared good
+    # quality gates on the staging layer (dbt test analog); a failing gate
+    # marks the whole run failed
     stg_d = reg.results["stg_declarations"]
     stg_a = reg.results["stg_alerts"]
-    gates = run_test_suite(
+    gate_suite = run_test_suite(
         [
             TestCase("stg_declarations.not_null.declaration_id",
                      test_not_null(stg_d, "declaration_id")),
@@ -94,8 +102,7 @@ def run_governed_pipeline(
             TestCase("stg_alerts.range.magnitude",
                      test_accepted_range(stg_a, "magnitude", 0.0, 1e9)),
         ]
-    ).collect()
-    gate_failures = [r["test_name"] for r in gates if r["status"] == "fail"]
+    )
 
     # retention (S13): rewrite the alert staging table to the keep window,
     # recording the compliance event
@@ -106,8 +113,6 @@ def run_governed_pipeline(
         governance=gov,
         table_name="stg_alerts",
     )
-    n_alerts = stg_a.count()
-    n_kept = kept_alerts.count()
 
     # SCD2 (timestamp strategy + hard deletes): day-1 snapshot of the
     # declaration state, then merge the "next day" slice — cost changes
@@ -123,14 +128,29 @@ def run_governed_pipeline(
         "estimated_cost", F.col("estimated_cost") * 1.1
     ).withColumn("updated_at", F.col("updated_at") + F.expr("INTERVAL 1 DAY"))
     merged = scd2_merge(snap, day2, key="declaration_id", updated_at="updated_at")
-    scd2_rows = merged.count()
-    scd2_current = merged.filter(F.col("is_current")).count()
 
-    # force-materialize the serving layer and count rows
-    table_counts = {}
-    for name in REPORT_TABLES:
-        if name in reg.results:
-            table_counts[name] = reg.results[name].count()
+    # every action at once; the report tables' counts force-materialize
+    # the serving layer
+    actions = {
+        "gates": gate_suite.collect,
+        "n_alerts": stg_a.count,
+        "n_kept": kept_alerts.count,
+        "scd2_rows": merged.count,
+        "scd2_current": merged.filter(F.col("is_current")).count,
+    }
+    report_tables = [name for name in REPORT_TABLES if name in reg.results]
+    for name in report_tables:
+        actions[name] = reg.results[name].count
+    with driver_pool(spark) as pool:
+        futures = {
+            key: pool.submit(inheritable_thread_target(spark)(action))
+            for key, action in actions.items()
+        }
+    out = {key: fut.result() for key, fut in futures.items()}
+    gates = out["gates"]
+    gate_failures = [r["test_name"] for r in gates if r["status"] == "fail"]
+    n_alerts, n_kept = out["n_alerts"], out["n_kept"]
+    table_counts = {name: out[name] for name in report_tables}
 
     wall = round(time.perf_counter() - wall0, 2)
     lineage = gov.lineage_df(spark)
@@ -148,7 +168,7 @@ def run_governed_pipeline(
             "rows_kept": n_kept,
             "rows_purged": n_alerts - n_kept,
         },
-        "scd2": {"snapshot_rows": scd2_rows, "current_rows": scd2_current},
+        "scd2": {"snapshot_rows": out["scd2_rows"], "current_rows": out["scd2_current"]},
         "table_counts": table_counts,
         "lineage_records": lineage.count(),
         "compliance_events": compliance.count(),

@@ -11,20 +11,42 @@ can ``ref()`` them. Materialization ``table`` caches the DataFrame (the
 Post-hooks model the reference's async MV refresh (`public_disasters.sql:13`)
 and audit inserts.
 
+Concurrency: :meth:`ModelRegistry.build` walks the DAG the way the
+reference's multiprocess executor runs independent assets at once
+(`jobs/ingestion_jobs.py:28-41`, ``max_concurrent=4``). Each model's
+``fn()``, cache, temp-view registration and post-hooks run on a driver
+thread pool, one thread per default task slot, as soon as every dependency
+inside the build has finished; its jobs carry the caller's job group and
+the description ``model <name>``. Independent mart branches and the eager
+driver-loop jobs inside their ``fn()`` calls therefore overlap. What a
+build produces does not depend on the order in which models finish:
+results, ``last_built`` and lineage records are committed in topo order.
+
 Scheduling: the reference re-runs its ingestion job every 10 minutes and its
 MV refresh every 5 (`definitions.py:84-94` cron schedules). Here each model
 may declare a ``refresh_interval``; :meth:`ModelRegistry.run_due` is the
 cron tick — driven by the injectable clock (`clock.py`), it rebuilds exactly
-the stale models, in dependency order, and leaves fresh ones untouched.
+the stale models, in dependency order, and leaves fresh ones untouched. A
+tick rebuilds a few stale roots, so it stays a sequential loop.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+
+
+def driver_pool(spark: SparkSession) -> ThreadPoolExecutor:
+    """Driver threads for overlapping independent Spark jobs, one per
+    default task slot. Wrap each submitted callable in
+    ``inheritable_thread_target(spark)`` so its jobs keep the caller's job
+    group and description."""
+    return ThreadPoolExecutor(max_workers=spark.sparkContext.defaultParallelism)
 
 
 @dataclass
@@ -229,6 +251,14 @@ class ModelRegistry:
     ) -> dict[str, DataFrame]:
         """Build models in dependency order; register each as a temp view.
 
+        Models are built concurrently (see the module docstring): a model
+        starts once every dependency inside this build has finished, so
+        independent branches overlap. Results, ``last_built`` and lineage
+        records are committed in topo order, as a sequential build would.
+        If a model raises, its dependents are never started, the models
+        already running finish, those that finished are committed, and the
+        first error in topo order propagates.
+
         ``now`` (injectable, never wall-clock — `clock.py`) stamps scheduler
         state so a later :meth:`run_due` tick knows what is fresh."""
         self._guard_disabled = True  # internal dep reads are not consumer reads
@@ -244,23 +274,69 @@ class ModelRegistry:
         now: datetime | None = None,
     ) -> dict[str, DataFrame]:
         wanted = set(select) if select else None
-        for name in self.topo_order():
-            if wanted is not None and name not in wanted and not self._is_dep_of(name, wanted):
-                continue
-            m = self._models[name]
-            deps = {d: self.results[d] for d in m.deps if d in self.results}
-            df = m.fn(spark, deps)
-            if m.materialization == "table":
-                df = df.cache()
-            df.createOrReplaceTempView(name)
-            self.results[name] = df
-            if now is not None:
-                self.last_built[name] = now
-            if self.governance is not None:
-                self.governance.lineage_record(m.deps, name, m.materialization)
-            for hook in m.post_hooks:
-                hook(spark, df)
+        order = [
+            n
+            for n in self.topo_order()
+            if wanted is None or n in wanted or self._is_dep_of(n, wanted)
+        ]
+        built: dict[str, DataFrame] = {}
+        try:
+            self._walk(spark, order, built)
+        finally:
+            for name in order:
+                if name not in built:
+                    continue
+                m = self._models[name]
+                self.results[name] = built[name]
+                if now is not None:
+                    self.last_built[name] = now
+                if self.governance is not None:
+                    self.governance.lineage_record(m.deps, name, m.materialization)
         return self.results
+
+    def _walk(self, spark: SparkSession, order: list[str], built: dict[str, DataFrame]) -> None:
+        """Run :meth:`_build_one` for every model in ``order`` on a driver
+        pool, each as soon as its dependencies in ``order`` are in ``built``."""
+        inside = set(order)
+        waiting = {n: {d for d in self._models[n].deps if d in inside} for n in order}
+        running: dict[Future, str] = {}
+        errors: dict[str, BaseException] = {}
+        with driver_pool(spark) as pool:
+            while running or (waiting and not errors):
+                ready = [] if errors else [n for n, left in waiting.items() if not left]
+                for name in ready:
+                    del waiting[name]
+                    m = self._models[name]
+                    deps = {
+                        d: built[d] if d in built else self.results.get(d)
+                        for d in m.deps
+                        if d in built or d in self.results
+                    }
+                    task = inheritable_thread_target(spark)(self._build_one)
+                    running[pool.submit(task, spark, m, deps)] = name
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
+                    exc = fut.exception()
+                    if exc is not None:
+                        errors[name] = exc
+                        continue
+                    built[name] = fut.result()
+                    for left in waiting.values():
+                        left.discard(name)
+        if errors:
+            raise errors[min(errors, key=order.index)]
+
+    @staticmethod
+    def _build_one(spark: SparkSession, m: Model, deps: dict[str, DataFrame]) -> DataFrame:
+        spark.sparkContext.setJobDescription(f"model {m.name}")
+        df = m.fn(spark, deps)
+        if m.materialization == "table":
+            df = df.cache()
+        df.createOrReplaceTempView(m.name)
+        for hook in m.post_hooks:
+            hook(spark, df)
+        return df
 
     def _is_dep_of(self, name: str, wanted: set[str]) -> bool:
         seen: set[str] = set()

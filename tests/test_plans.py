@@ -433,3 +433,180 @@ def test_staleness_guard_in_mart_serving_path(spark):
     assert len(calls) == first_count
     release_tracked()
     spark.catalog.clearCache()
+
+
+# -- concurrent build: the DAG walk on the driver pool ------------------------
+
+
+def _traced_dag(deps: dict[str, list[str]], sleeps=None):
+    """A registry over ``deps`` whose fns record ("start"/"end", name)
+    events and sleep ``sleeps[name]`` seconds in between."""
+    import threading
+    import time
+
+    events: list[tuple[str, str]] = []
+    sleeps = sleeps or {}
+    lock = threading.Lock()
+    reg = ModelRegistry()
+
+    def fn(s, d, _name):
+        with lock:
+            events.append(("start", _name))
+        time.sleep(sleeps.get(_name, 0.0))
+        df = s.range(3).withColumnRenamed("id", _name)
+        with lock:
+            events.append(("end", _name))
+        return df
+
+    for i, (name, ds) in enumerate(deps.items()):
+        reg.register(
+            Model(name, lambda s, d, _n=name: fn(s, d, _n), ds,
+                  "table" if i % 2 == 0 else "view")
+        )
+    return reg, events
+
+
+DIAMOND = {"a": [], "b": ["a"], "c": ["a"], "d": ["b", "c"]}
+
+
+def _wide_dag(n: int = 24, seed: int = 7) -> dict[str, list[str]]:
+    import random
+
+    rng = random.Random(seed)
+    deps: dict[str, list[str]] = {}
+    for i in range(n):
+        earlier = list(deps)
+        deps[f"m{i:02d}"] = rng.sample(earlier, min(len(earlier), rng.randint(0, 2)))
+    return deps
+
+
+@pytest.mark.parametrize("shape", ["diamond", "wide"])
+def test_concurrent_build_starts_model_after_its_deps(spark, shape):
+    """No fn() starts before every dependency's fn() has returned, and each
+    runs once. The wide DAG runs more builders than cores with a short
+    thread switch interval."""
+    import sys
+
+    if shape == "diamond":
+        deps, sleeps = DIAMOND, {"a": 0.1, "b": 0.2, "c": 0.05}
+    else:
+        deps, sleeps = _wide_dag(), {}
+    reg, events = _traced_dag(deps, sleeps)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        reg.build(spark)
+    finally:
+        sys.setswitchinterval(interval)
+    pos = {ev: i for i, ev in enumerate(events)}
+    assert len(events) == len(pos) == 2 * len(deps)
+    for name, ds in deps.items():
+        for dep in ds:
+            assert pos[("end", dep)] < pos[("start", name)], (name, dep, events)
+
+
+def test_concurrent_build_overlaps_independent_siblings(spark):
+    """b and c each wait for the other at a barrier: a walk that builds one
+    model at a time times out here."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=10)
+
+    def sibling(s, d):
+        barrier.wait()  # returns only once the other sibling is running too
+        return d["a"]
+
+    reg = ModelRegistry()
+    reg.register(Model("a", lambda s, d: s.range(2)))
+    reg.register(Model("b", sibling, deps=["a"]))
+    reg.register(Model("c", sibling, deps=["a"]))
+    reg.build(spark)
+    assert set(reg.results) == {"a", "b", "c"}
+
+
+def test_concurrent_build_failure_stops_dependents(spark):
+    import threading
+    import time
+
+    called: list[str] = []
+
+    def boom(s, d):
+        raise ValueError("model a failed")
+
+    def child(s, d):
+        called.append("child")
+        return d["a"]
+
+    def sibling(s, d):
+        time.sleep(0.3)
+        called.append("sibling")
+        return s.range(1)
+
+    reg = ModelRegistry()
+    reg.register(Model("a", boom))
+    reg.register(Model("child", child, deps=["a"]))
+    reg.register(Model("sibling", sibling))
+    before = set(threading.enumerate())
+    with pytest.raises(ValueError, match="model a failed"):
+        reg.build(spark)
+    assert called == ["sibling"]  # the running sibling finished; child never ran
+    assert "sibling" in reg.results and "a" not in reg.results
+    assert "child" not in reg.results
+    leftover = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert leftover == []
+
+
+def test_concurrent_build_commits_in_topo_order(spark):
+    """Lineage rows and ``last_built`` equal a sequential build's, whatever
+    order the models finish in (here the first branch finishes last)."""
+    from datetime import datetime
+
+    from emdatapipelines_spark.lineage import GovernanceLog
+
+    gov = GovernanceLog()
+    reg, _ = _traced_dag(DIAMOND, sleeps={"b": 0.4})
+    reg.governance = gov
+    reg.register(Model("e", lambda s, d: s.range(1)))  # independent, fast
+    now = datetime(2024, 3, 1)
+    reg.build(spark, now=now)
+
+    seq = GovernanceLog(run_id=gov.run_id)
+    for name in reg.topo_order():
+        m = reg._models[name]
+        seq.lineage_record(m.deps, name, m.materialization)
+
+    def strip(rows):  # drop the timestamp column
+        return [r[:4] + r[5:] for r in rows]
+
+    assert strip(gov.lineage_rows) == strip(seq.lineage_rows)
+    assert list(reg.last_built.items()) == [(n, now) for n in reg.topo_order()]
+    assert list(reg.results) == reg.topo_order()
+
+
+def test_concurrent_build_jobs_carry_group_and_model_tag(spark):
+    """Jobs launched inside a model's fn() run under the caller's job group
+    and carry the description ``model <name>``."""
+    import uuid
+
+    sc = spark.sparkContext
+    reg = ModelRegistry()
+    for name in ("eager_x", "eager_y"):
+        def fn(s, d, _n=name):
+            s.range(5).count()  # an eager job inside the build
+            return s.range(1)
+
+        reg.register(Model(name, fn))
+    group = f"registry-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "caller")
+    try:
+        reg.build(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    store = sc._jsc.sc().statusStore()
+    tags = {store.job(j).description().get() for j in ids}
+    assert tags == {"model eager_x", "model eager_y"}

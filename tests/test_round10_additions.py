@@ -112,6 +112,25 @@ def test_exact_lcs_fanout_invariance(spark):
     assert a == b and all(r["lcs_tokens"] == 4 for r in a)
 
 
+def test_exact_lcs_eval_collect_is_bounded(spark, monkeypatch):
+    """The eval corpus is collected to the driver only up to MAX_EVAL_DOCS;
+    one document more raises a typed error naming the operator and knob."""
+    import pytest
+
+    from emdatapipelines_spark.bounds import DriverCollectBoundError
+    from emdatapipelines_spark.llmdata import dedup
+
+    d = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    ev = spark.createDataFrame(
+        [(100 + i, f"a b x{i}") for i in range(4)], "doc_id long, text string"
+    )
+    monkeypatch.setattr(dedup, "MAX_EVAL_DOCS", 4)
+    assert exact_lcs_contamination(d, ev).first()["lcs_tokens"] == 2
+    monkeypatch.setattr(dedup, "MAX_EVAL_DOCS", 3)
+    with pytest.raises(DriverCollectBoundError, match=r"exact_lcs_contamination.*MAX_EVAL_DOCS.*3"):
+        exact_lcs_contamination(d, ev)
+
+
 def test_exact_lcs_is_upper_envelope_of_ladder(spark):
     """Contract vs dd_contamination_ladder on the fixture split: the exact
     value must be >= every hit rung and < the first missed rung."""
