@@ -551,7 +551,9 @@ def _phash64(rgb: "np.ndarray") -> int:
     """64-bit DCT perceptual hash: luma → 32x32 bilinear → 2D DCT-II → the
     8x8 low-frequency block → bit i = coeff_i > median (DC excluded from
     the median, the published convention). Robust to resize/brightness,
-    sensitive to content."""
+    sensitive to content. The DCT operand is a C-ordered float64 plane:
+    that layout is part of the reference, since the GEMM's summation order
+    (and so the noise-level bits) depends on it."""
     g = (
         rgb[..., 0].astype(np.uint32) * 299
         + rgb[..., 1].astype(np.uint32) * 587
@@ -559,7 +561,7 @@ def _phash64(rgb: "np.ndarray") -> int:
     ) // 1000
     small = _bilinear_resize(
         np.repeat(g.astype(np.uint8)[..., None], 3, axis=2), 32, 32
-    )[..., 0].astype(np.float64)
+    )[..., 0].astype(np.float64, order="C")
     m = _dct_basis(32)
     coef = m @ small @ m.T
     block = coef[:8, :8].flatten()
@@ -573,11 +575,15 @@ def _phash64_batch(gs: "np.ndarray") -> "np.ndarray":
     vectorized resize + one broadcast DCT for the whole stack (guide §4.2:
     hand whole batches to native code instead of looping rows in Python).
     Element-for-element the same arithmetic as :func:`_phash64`: the
-    bilinear gather, rint/clip quantization, ``m @ small @ m.T`` (numpy's
-    stacked matmul runs the identical per-slice GEMM), 63-coefficient
-    median and bit-pack are all elementwise or per-slice identical, which
-    ``test_phash_batch_kernel_matches_rowwise`` pins bit-for-bit. Returns
-    ``(N,)`` uint64."""
+    bilinear gather, rint/clip quantization, ``m @ small @ m.T``,
+    63-coefficient median and bit-pack are all elementwise or per-slice
+    identical, which ``test_phash_batch_kernel_matches_rowwise`` pins
+    bit-for-bit. The stacked matmul runs the same per-slice GEMM as the
+    2-D one only when the operand layouts match: the gathered stack's
+    strides depend on ``N``, and a different layout takes a different BLAS
+    path with a different summation order. Both paths therefore pass
+    C-ordered planes, so a hash depends neither on the batch size nor on
+    the batch-mates. Returns ``(N,)`` uint64."""
     n, src_h, src_w = gs.shape
     # inline single-channel _bilinear_resize to 32x32 (the rowwise path
     # resizes a 3x-repeated gray plane and slices channel 0 — channels are
@@ -597,7 +603,7 @@ def _phash64_batch(gs: "np.ndarray") -> "np.ndarray":
     small = (
         np.clip(np.rint(top * (1 - wy) + bot * wy), 0, 255)
         .astype(np.uint8)
-        .astype(np.float64)
+        .astype(np.float64, order="C")
     )
     m = _dct_basis(32)
     coef = np.matmul(np.matmul(m, small), m.T)

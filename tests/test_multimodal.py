@@ -251,6 +251,33 @@ def test_phash_batch_kernel_matches_rowwise():
         assert got == want, f"batch kernel diverged at shape {shape}"
 
 
+def test_phash_batch_kernel_independent_of_batch_mates():
+    """A plane's hash must not depend on how many same-shape planes share
+    its stack: `image_phash` forms one stack per shape per Arrow batch, so
+    a batch-size-dependent hash splits exact duplicates that land in
+    different batches. Noise-level blocks (constant planes, 1-pixel-tall
+    planes) are the ones whose bits a different GEMM summation order
+    flips. Pure numpy."""
+    import numpy as np
+
+    from emdatapipelines_spark.llmdata.multimodal import _phash64, _phash64_batch
+
+    rng = np.random.default_rng(7)
+    planes = [
+        np.full((8, 8), 77, dtype=np.uint8),
+        np.full((1, 64), 77, dtype=np.uint8),
+        rng.integers(0, 256, size=(1, 64), dtype=np.uint8),
+    ]
+    for plane in planes:
+        want = _phash64(np.repeat(plane[..., None], 3, axis=2))
+        # a mix of random and identical batch-mates of the same shape
+        mates = [rng.integers(0, 256, size=plane.shape, dtype=np.uint8), plane]
+        for n in (1, 2, 3, 5, 8):
+            stack = np.stack([plane] + [mates[i % 2] for i in range(n - 1)])
+            got = int(_phash64_batch(stack)[0])
+            assert got == want, f"shape {plane.shape}, stack of {n}"
+
+
 def test_phash_invariances(spark):
     """pHash: identical → distance 0; global brightness shift → small
     distance (DCT AC coefficients unchanged-ish); unrelated noise → large
