@@ -9,6 +9,21 @@ a TTL result cache.
 StarRocks-over-pymysql becomes ``spark.sql`` over registered views; the
 middleware stays deliberately driver-side plain Python (it guards the query
 boundary, not the data path).
+
+Cache admission: a result is pinned (``df.cache()``) on the *second* request
+for its fingerprint, not the first. A miss stores the plain ``spark.sql``
+frame in the TTL entry. The request that finds that entry live replaces it
+with a new frame for the same query, pinned before it runs, so the second
+request builds the in-memory relation and the third and later requests
+read it. (The stored frame cannot be pinned in place: Spark fixes a frame's
+physical plan at its first action, so a frame that has already run keeps
+recomputing after ``cache()``.) Most requests are one-off queries, and
+building an in-memory relation that no later request reads costs them
+planning and execution. The trade-off: a fingerprint pays at most one
+extra uncached execution in total, and the second request pays the cache
+build the first one used to pay. ``warm()`` admits its queries at once,
+since the warm list holds known-hot queries. ``usage_log`` ``elapsed_ms``
+is plan-build time only (execution is lazy).
 """
 
 from __future__ import annotations
@@ -134,10 +149,19 @@ class QueryEngine:
             if use_cache:
                 hit = self._cache.get(fp)
                 if hit and hit.expires_at > now:
+                    if not hit.df.is_cached:
+                        # admitted on its second request: the first one stored
+                        # the plain frame, this one pins a new frame before it
+                        # runs, later ones read memory. The cost is one extra
+                        # uncached execution per fingerprint.
+                        hit.df = self.spark.sql(query).cache()
                     return hit.df
+                if hit:
+                    # expired but not yet swept: release its pin before the
+                    # entry is overwritten, or nothing would own it
+                    self.evict_expired(now)
             df = self.spark.sql(query)
             if use_cache:
-                df = df.cache()
                 self._cache[fp] = _CacheEntry(df, now + self.cache_ttl)
             return df
         except Exception:
@@ -149,9 +173,13 @@ class QueryEngine:
             entry["elapsed_ms"] = (time.perf_counter() - t0) * 1000.0
 
     def warm(self, queries: list[str], now: float | None = None) -> None:
-        """Pre-populate the cache (`public_resources.py:537-599` warm list)."""
+        """Pre-populate the cache (`public_resources.py:537-599` warm list).
+        Warm queries are known to be hot, so they are admitted at once."""
         for q in queries:
-            self.sql(q, org="cache-warmer", now=now).count()
+            df = self.sql(q, org="cache-warmer", now=now)
+            if not df.is_cached:
+                df.cache()  # a miss returns the stored frame before it runs
+            df.count()
 
     def evict_expired(self, now: float | None = None) -> int:
         now = now if now is not None else time.time()
